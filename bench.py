@@ -7,10 +7,12 @@ Prints ONE JSON line:
    "queries": {"q1": sec, ...}, "sf": 0.1}
 
 Each query executes to a noop sink (full computation, no driver-side row
-transfer). Every query is warmed once (plan + codegen + JIT) and then timed,
-so timings measure steady-state execution, not Catalyst compilation — the
-number that matters for a long-lived cluster serving repeated queries.
-"value" is the sum of per-query steady-state wall seconds.
+transfer). Every query is warmed once (JVM JIT, codegen caches) and then
+timed. Each timed run calls the query function again, so its wall time
+covers building the DataFrame in Python (py4j calls and any eager jobs the
+operators issue), Catalyst analysis, optimization and planning, and
+execution — not execution alone. "value" is the sum of per-query warm wall
+seconds.
 """
 
 from __future__ import annotations

@@ -78,6 +78,31 @@ def test_passes_boolean(clean, dirty):
     assert not expect(dirty).not_null(["name"]).passes()
 
 
+def test_failures_and_report_agree(spark):
+    """collect_failures() and report() read one plan, so they give the same
+    true count for every check (2 duplicated keys, 2 orphan FK rows)."""
+    df = spark.createDataFrame(
+        [(1, 10), (1, 10), (2, 20), (2, 20), (3, 98), (4, 99)], "id long, fk long"
+    )
+    dim = spark.createDataFrame([(10,), (20,)], "fk long")
+    suite = expect(df).not_null(["id"]).unique(["id"]).fk("fk", dim).in_range("fk", hi=50)
+    failures = suite.collect_failures()
+    assert failures == {"unique(id)": 2, "fk(fk)": 2, "in_range(fk)": 2}
+    reported = {r.test: r.n_violations for r in suite.report("t").collect()}
+    assert reported == {"not_null(id)": 0, **failures}
+
+
+def test_report_keeps_quotes_in_names(spark):
+    df = spark.createDataFrame([(1, 5.0)], "id long, v double")
+    rep = expect(df).custom("v isn't negative", F.col("v") < 0).report("t").collect()
+    assert [(r.test, r.n_violations, r.passed) for r in rep] == [("v isn't negative", 0, True)]
+
+
+def test_empty_expectation_has_no_failures(clean):
+    assert expect(clean).collect_failures() == {}
+    assert expect(clean).passes()
+
+
 # ---------------------------------------------------------------- observe ----
 
 def test_observed_expectations_pass(spark, tmp_path):

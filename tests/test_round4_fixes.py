@@ -40,14 +40,12 @@ DEGENERATE_DOCS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def degenerate_sf(tmp_path_factory) -> str:
-    """sf0.001 with documents.parquet swapped for the degenerate table."""
+def _sf_with_documents(d, rows) -> str:
+    """sf0.001 in directory ``d`` with documents.parquet swapped for ``rows``."""
     import duckdb
 
     base = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
     src = os.path.join(base, "sf0.001")
-    d = tmp_path_factory.mktemp("sf_degenerate")
     for t in TABLES:
         if t != "documents":
             os.symlink(os.path.join(src, f"{t}.parquet"), d / f"{t}.parquet")
@@ -56,9 +54,15 @@ def degenerate_sf(tmp_path_factory) -> str:
         "CREATE TABLE docs (doc_id BIGINT, text VARCHAR, lang VARCHAR,"
         " source VARCHAR, n_chars BIGINT)"
     )
-    con.executemany("INSERT INTO docs VALUES (?, ?, ?, ?, ?)", DEGENERATE_DOCS)
+    con.executemany("INSERT INTO docs VALUES (?, ?, ?, ?, ?)", rows)
     con.execute(f"COPY docs TO '{d / 'documents.parquet'}' (FORMAT PARQUET)")
     return str(d)
+
+
+@pytest.fixture(scope="module")
+def degenerate_sf(tmp_path_factory) -> str:
+    """sf0.001 with documents.parquet swapped for the degenerate table."""
+    return _sf_with_documents(tmp_path_factory.mktemp("sf_degenerate"), DEGENERATE_DOCS)
 
 
 @pytest.mark.parametrize(
@@ -71,6 +75,27 @@ def test_sequence_guard_on_short_docs(name: str, spark, degenerate_sf: str):
     spark_pdf = QUERIES[name](spark, degenerate_sf).toPandas()
     duck_pdf = duck_con(degenerate_sf).execute(ORACLES[name]).fetchdf()
     assert_bit_exact(name, spark_pdf, duck_pdf)
+
+
+def test_dedup_detector_null_text_docs(spark, tmp_path):
+    """NULL text has a NULL 16-token prefix, which equals nothing (the
+    oracle's ``a.p = b.p``): three NULL-text docs add no truth pair. Grouping
+    the prefixes without dropping NULLs counted C(3, 2) = 3 phantom pairs."""
+    sentence = "the quick brown fox jumps over the lazy dog again and again ok"
+    docs = [
+        (1, None, "en", "src0", 0),
+        (2, None, "en", "src1", 0),
+        (3, None, "fr", "src2", 0),
+        (4, sentence, "en", "src0", 63),
+        (5, sentence, "en", "src1", 63),
+        (6, "one two three four five", "en", "src2", 23),
+    ]
+    sf = _sf_with_documents(tmp_path, docs)
+    name = "dedup_detector_pr"
+    spark_pdf = QUERIES[name](spark, sf).toPandas()
+    duck_pdf = duck_con(sf).execute(ORACLES[name]).fetchdf()
+    assert_bit_exact(name, spark_pdf, duck_pdf)
+    assert spark_pdf["n_truth"].tolist() == [1]
 
 
 def test_degenerate_docs_full_sweep(spark, degenerate_sf: str):

@@ -7,11 +7,7 @@ is expressed on the DataFrame API so Catalyst owns the physical plan;
 incremental watermark state, and the near-dup/similarity extensions.
 """
 
-from unified_firmographic_data_pipeline_spark.operators.dedup import (
-    dedup_exact,
-    dedup_first,
-    dedup_latest,
-)
+from unified_firmographic_data_pipeline_spark.operators.dedup import dedup_exact, dedup_first
 from unified_firmographic_data_pipeline_spark.operators.flatten import flatten_json_array
 from unified_firmographic_data_pipeline_spark.operators.incremental import (
     incremental_filter,
@@ -21,7 +17,6 @@ from unified_firmographic_data_pipeline_spark.operators.scd2 import scd2_apply, 
 
 __all__ = [
     "dedup_first",
-    "dedup_latest",
     "dedup_exact",
     "flatten_json_array",
     "incremental_filter",

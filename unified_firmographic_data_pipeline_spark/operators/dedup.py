@@ -3,7 +3,8 @@
 Reference semantics (SURVEY.md §2.G):
 - G1 keep-first: ``row_number() OVER (PARTITION BY cik ORDER BY date_added)``
   then ``rn = 1`` (``stg_wiki_sp500.sql:37-45``).
-- G2 keep-latest: same with DESC order (``cr_company_complete.sql:47-52,91``).
+- G2 keep-latest: the same keep-first over DESC columns
+  (``cr_company_complete.sql:47-52,91``).
 
 Scale notes: a windowed row_number shuffles once on the key — the same cost
 as any groupBy on that key, and AQE's skew-join/skew-agg handling applies.
@@ -19,40 +20,19 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _order_cols(order_by: Sequence[Column | str], desc: bool) -> list[Column]:
-    out = []
-    for c in order_by:
-        col = F.col(c) if isinstance(c, str) else c
-        # a caller-supplied SortOrder (e.g. asc_nulls_last) keeps its direction
-        if " ASC" in str(col) or " DESC" in str(col):
-            out.append(col)
-        else:
-            out.append(col.desc() if desc else col.asc())
-    return out
-
-
 def dedup_first(
     df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | str]
 ) -> DataFrame:
-    """Keep the first row per key by ascending ``order_by``.
+    """Keep the first row per key by ``order_by``, which goes to
+    ``Window.orderBy`` as given: names sort ascending, and sort orders such
+    as ``F.desc(c)`` keep their direction (keep-latest is keep-first over
+    descending columns).
 
     Callers should pass a total order (add a unique tiebreak column) — the
     reference relies on arbitrary tie resolution (SURVEY.md §2.G), which this
     engine deliberately does not.
     """
-    w = Window.partitionBy(*keys).orderBy(*_order_cols(order_by, desc=False))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def dedup_latest(
-    df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | str]
-) -> DataFrame:
-    """Keep the last row per key by descending ``order_by`` (latest wins)."""
-    w = Window.partitionBy(*keys).orderBy(*_order_cols(order_by, desc=True))
+    w = Window.partitionBy(*keys).orderBy(*order_by)
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)

@@ -47,11 +47,7 @@ from unified_firmographic_data_pipeline_spark.functions.text import (
     token_count,
     tokens,
 )
-from unified_firmographic_data_pipeline_spark.operators.dedup import (
-    dedup_exact,
-    dedup_first,
-    dedup_latest,
-)
+from unified_firmographic_data_pipeline_spark.operators.dedup import dedup_exact, dedup_first
 from unified_firmographic_data_pipeline_spark.operators.neardup import (
     jaccard_pairs,
     minhash_lsh_candidates,
@@ -642,7 +638,7 @@ def window_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2 keep-latest-per-key (cr_company_complete dedup shape)."""
     e = _t(spark, sf_dir, "events")
-    return dedup_latest(e, ["user_id"], ["ts", "event_id"]).select(
+    return dedup_first(e, ["user_id"], [F.desc("ts"), F.desc("event_id")]).select(
         "user_id", "event_id", "ts", "event_type"
     )
 
@@ -12897,9 +12893,11 @@ def dedup_detector_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.md5(F.array_join(F.slice("t", 1, 16), " ")).alias("p")
     )
     # same fan-out for the prefix-duplicate truth set (replaces pa⋈pb):
-    # each prefix group's sorted ids emit every unordered pair once
+    # each prefix group's sorted ids emit every unordered pair once. A NULL
+    # prefix (NULL text) matches nothing, as in the join's p = p.
     truth = (
-        pfx.groupBy("p")
+        pfx.filter(F.col("p").isNotNull())
+        .groupBy("p")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
         .filter(F.size("ds") >= 2)
         .select(

@@ -33,7 +33,7 @@ from unified_firmographic_data_pipeline_spark.functions.cleaning import (
     yes_no_to_bool,
 )
 from unified_firmographic_data_pipeline_spark.functions.keys import surrogate_key
-from unified_firmographic_data_pipeline_spark.operators.dedup import dedup_first, dedup_latest
+from unified_firmographic_data_pipeline_spark.operators.dedup import dedup_first
 from unified_firmographic_data_pipeline_spark.operators.flatten import flatten_json_array
 from unified_firmographic_data_pipeline_spark.operators.incremental import (
     high_watermark,
@@ -60,6 +60,43 @@ FORTUNE_ITEM_SCHEMA = StructType(
         StructField("data", MapType(StringType(), StringType())),
     ]
 )
+
+
+#: Fortune yes/no flag columns and the payload keys they parse from.
+FORTUNE_FLAGS = {
+    "is_best_company": "Best Companies",
+    "is_change_the_world": "Change the World",
+    "dropped_in_rank": "Dropped in Rank",
+    "is_future_50": "Future 50",
+    "is_global_500": "Global 500",
+    "is_profitable": "Profitable",
+    "is_newcomer": "Newcomer to the Fortune 500",
+    "has_female_ceo": "Female CEO",
+    "founder_is_ceo": "Founder is CEO",
+    "is_fastest_growing": "Fastest Growing Companies",
+    "is_most_admired": "World's Most Admired Companies",
+}
+
+#: The Fortune metrics that ``fortune_metrics_snapshot`` versions and
+#: ``dim_fortune_metrics`` serves.
+FORTUNE_METRICS = [
+    "company_order", "company_rank", "slug",
+    *FORTUNE_FLAGS,
+    "change_rank_500", "change_rank_1000",
+]
+
+#: Star-schema surrogate keys and their components (dim_company.sql:3,
+#: fact_company_performance.sql:3-5, snapshots/*.sql:14). The fact builds
+#: the same three, so fact and dimension keys match by construction.
+STAR_KEYS = {
+    "company_key": ["company_name", "symbol"],
+    "location_key": ["company_name", "headquarters_city", "headquarters_state"],
+    "fortune_metrics_key": ["company_name", "slug"],
+}
+
+
+def _key(name: str):
+    return surrogate_key(STAR_KEYS[name]).alias(name)
 
 
 def _wiki_tests(ctx: Context, df) -> None:
@@ -161,19 +198,6 @@ def stg_fortune500(ctx: Context):
     )
     it = F.col("item")
     d = it["data"]
-    flags = {
-        "is_best_company": "Best Companies",
-        "is_change_the_world": "Change the World",
-        "dropped_in_rank": "Dropped in Rank",
-        "is_future_50": "Future 50",
-        "is_global_500": "Global 500",
-        "is_profitable": "Profitable",
-        "is_newcomer": "Newcomer to the Fortune 500",
-        "has_female_ceo": "Female CEO",
-        "founder_is_ceo": "Founder is CEO",
-        "is_fastest_growing": "Fastest Growing Companies",
-        "is_most_admired": "World's Most Admired Companies",
-    }
     return flat.select(
         "raw_id",
         "ingested_at",
@@ -193,7 +217,7 @@ def stg_fortune500(ctx: Context):
         d["State"].alias("headquarters_state"),
         d["Industry"].alias("industry"),
         d["Sector"].alias("sector"),
-        *[yes_no_to_bool(d[src]).alias(dst) for dst, src in flags.items()],
+        *[yes_no_to_bool(d[src]).alias(dst) for dst, src in FORTUNE_FLAGS.items()],
         F.coalesce(nullif_empty(d["Change in Rank (500 only)"]).cast("double"), F.lit(0.0)).alias(
             "change_rank_500"
         ),
@@ -210,9 +234,7 @@ CORE_COLUMNS = [
     "assets_m", "revenues_m", "profits_m", "market_value_m", "employees",
     "revenue_pct_change", "profit_pct_change",
     "headquarters_city", "headquarters_state", "industry", "sector",
-    "is_best_company", "is_change_the_world", "dropped_in_rank",
-    "is_future_50", "is_global_500", "is_profitable", "is_newcomer",
-    "has_female_ceo", "founder_is_ceo", "is_fastest_growing", "is_most_admired",
+    *FORTUNE_FLAGS,
     "change_rank_500", "change_rank_1000",
     "symbol", "cik", "date_added", "founded_year", "gics_sector", "gics_sub_industry",
 ]
@@ -245,7 +267,7 @@ def cr_company_complete(ctx: Context):
         .join(s.drop("raw_id", "source"), "company_name", "inner")
         .select(*CORE_COLUMNS)
     )
-    return dedup_latest(combined, ["company_name"], [F.col("last_updated"), F.col("cik")])
+    return dedup_first(combined, ["company_name"], [F.desc("last_updated"), F.desc("cik")])
 
 
 @model(
@@ -260,9 +282,7 @@ def company_location_snapshot(ctx: Context):
     """snapshots/company_location_snapshot.sql:13-18 (SCD2 fold done by the
     runner via scd2_apply — strategy=timestamp, hard-delete invalidation)."""
     return ctx.ref("cr_company_complete").select(
-        surrogate_key(["company_name", "headquarters_city", "headquarters_state"]).alias(
-            "location_key"
-        ),
+        _key("location_key"),
         "headquarters_city",
         "headquarters_state",
         "last_updated",
@@ -280,24 +300,7 @@ def company_location_snapshot(ctx: Context):
 def fortune_metrics_snapshot(ctx: Context):
     """snapshots/fortune_metrics_snapshot.sql:13-32."""
     return ctx.ref("cr_company_complete").select(
-        surrogate_key(["company_name", "slug"]).alias("fortune_metrics_key"),
-        "company_order",
-        "company_rank",
-        "slug",
-        "is_best_company",
-        "is_change_the_world",
-        "dropped_in_rank",
-        "is_future_50",
-        "is_global_500",
-        "is_profitable",
-        "is_newcomer",
-        "has_female_ceo",
-        "founder_is_ceo",
-        "is_fastest_growing",
-        "is_most_admired",
-        "change_rank_500",
-        "change_rank_1000",
-        "last_updated",
+        _key("fortune_metrics_key"), *FORTUNE_METRICS, "last_updated"
     )
 
 
@@ -309,7 +312,7 @@ def _dim_company_tests(ctx: Context, df) -> None:
 def dim_company(ctx: Context):
     """models/star/dim_company.sql."""
     return ctx.ref("cr_company_complete").select(
-        surrogate_key(["company_name", "symbol"]).alias("company_key"),
+        _key("company_key"),
         "symbol",
         "company_name",
         "industry",
@@ -334,24 +337,7 @@ def dim_location(ctx: Context):
 def dim_fortune_metrics(ctx: Context):
     """models/star/dim_fortune_metrics.sql — current rows only (J2)."""
     return scd2_current(ctx.ref("fortune_metrics_snapshot")).select(
-        "fortune_metrics_key",
-        "company_order",
-        "company_rank",
-        "slug",
-        "is_best_company",
-        "is_change_the_world",
-        "dropped_in_rank",
-        "is_future_50",
-        "is_global_500",
-        "is_profitable",
-        "is_newcomer",
-        "has_female_ceo",
-        "founder_is_ceo",
-        "is_fastest_growing",
-        "is_most_admired",
-        "change_rank_500",
-        "change_rank_1000",
-        F.col(VALID_FROM).alias("valid_from"),
+        "fortune_metrics_key", *FORTUNE_METRICS, F.col(VALID_FROM).alias("valid_from")
     )
 
 
@@ -379,11 +365,7 @@ def fact_company_performance(ctx: Context):
     wm = high_watermark(ctx.prior(), "last_updated")
     core = incremental_filter(core, "last_updated", wm)
     return core.select(
-        surrogate_key(["company_name", "symbol"]).alias("company_key"),
-        surrogate_key(["company_name", "headquarters_city", "headquarters_state"]).alias(
-            "location_key"
-        ),
-        surrogate_key(["company_name", "slug"]).alias("fortune_metrics_key"),
+        *[_key(k) for k in STAR_KEYS],
         "assets_m",
         "revenues_m",
         "profits_m",

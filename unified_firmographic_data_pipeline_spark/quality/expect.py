@@ -6,13 +6,16 @@ Reference test taxonomy (SURVEY.md §5): ``not_null``, ``unique``,
 check is a SELECT of violating rows; pass = 0 violations; ``run()`` raises
 (gating downstream models, like dbt test gates the DAG — ``DAG:201``).
 
-Every check counts violations in a single aggregate job; ``run()`` batches
-them so N checks cost one pass per underlying frame, not N actions, which is
-what makes the suite usable on 100 TB tables.
+All checks of a suite count their violations in ONE plan (``_counts``): the
+expression checks fold into a single aggregate over the frame, each
+``unique``/``fk`` adds its own count, and the counts are unioned. So a suite
+of N checks costs one action, not N — in ``run()``/``passes()`` and in
+``report()`` alike, which is what makes the suite usable on 100 TB tables.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 from collections.abc import Sequence
 
@@ -27,13 +30,15 @@ class QualityError(AssertionError):
 @dataclass
 class _Check:
     name: str
-    # violation count expression evaluated over the base frame, OR a
-    # standalone counting thunk for checks needing their own plan (unique/fk)
+    # violation count: an expression over the base frame, OR (unique/fk) a
+    # 1-row frame with BIGINT column `n` from a plan of its own
     agg: Column | None = None
-    thunk: object | None = None
-    # lazy builder returning a 1-row DataFrame with BIGINT column `n` —
-    # the plan-native twin of `thunk`, used by report()
-    frame: object | None = None
+    frame: DataFrame | None = None
+
+
+def _n(violations: DataFrame) -> DataFrame:
+    """The row count of ``violations`` as a 1-row frame with BIGINT ``n``."""
+    return violations.agg(F.count("*").cast("long").alias("n"))
 
 
 @dataclass
@@ -52,46 +57,18 @@ class Expectation:
     def unique(self, cols: Sequence[str]) -> "Expectation":
         """dbt ``unique``: GROUP BY col HAVING count(*) > 1 (SURVEY §2.H H2)."""
         for c in cols:
-            df = self.df
-
-            def _count(df=df, c=c) -> int:
-                return (
-                    df.groupBy(c).count().filter(F.col("count") > 1).limit(1).count()
-                )
-
-            def _frame(df=df, c=c) -> DataFrame:
-                return (
-                    df.groupBy(c)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .agg(F.count("*").cast("long").alias("n"))
-                )
-
-            self.checks.append(_Check(f"unique({c})", thunk=_count, frame=_frame))
+            dup = self.df.groupBy(c).count().filter(F.col("count") > 1)
+            self.checks.append(_Check(f"unique({c})", frame=_n(dup)))
         return self
 
     def fk(self, key: str, dim: DataFrame, dim_key: str | None = None) -> "Expectation":
         """dbt ``relationships``: every fact key exists in the dimension
         (left-anti join count — SURVEY §2.C C2)."""
-        dim_key = dim_key or key
-        df = self.df
-
-        def _count(df=df, key=key, dim=dim, dim_key=dim_key) -> int:
-            return (
-                df.select(F.col(key)).where(F.col(key).isNotNull())
-                .join(dim.select(F.col(dim_key).alias(key)), key, "left_anti")
-                .limit(1)
-                .count()
-            )
-
-        def _frame(df=df, key=key, dim=dim, dim_key=dim_key) -> DataFrame:
-            return (
-                df.select(F.col(key)).where(F.col(key).isNotNull())
-                .join(dim.select(F.col(dim_key).alias(key)), key, "left_anti")
-                .agg(F.count("*").cast("long").alias("n"))
-            )
-
-        self.checks.append(_Check(f"fk({key})", thunk=_count, frame=_frame))
+        orphans = (
+            self.df.select(F.col(key)).where(F.col(key).isNotNull())
+            .join(dim.select(F.col(dim_key or key).alias(key)), key, "left_anti")
+        )
+        self.checks.append(_Check(f"fk({key})", frame=_n(orphans)))
         return self
 
     def accepted(self, col: str, values: Sequence) -> "Expectation":
@@ -116,23 +93,29 @@ class Expectation:
         return self
 
     # -- execution ----------------------------------------------------------
+    def _counts(self) -> DataFrame | None:
+        """ONE lazy plan with a row ``(i, n)`` per check: ``i`` is the check's
+        index, ``n`` its violation count. The expression checks fold into a
+        single aggregate pass over the base frame (melted via stack); each
+        unique/fk count is unioned in (a cross join would add a broadcast
+        job per 1-row side). None when no check is registered."""
+        frames = []
+        aggs = [(i, c.agg) for i, c in enumerate(self.checks) if c.agg is not None]
+        if aggs:
+            one = self.df.agg(*[a.cast("long").alias(f"c{i}") for i, a in aggs])
+            pairs = ", ".join(f"{i}, c{i}" for i, _ in aggs)
+            frames.append(one.select(F.expr(f"stack({len(aggs)}, {pairs}) AS (i, n)")))
+        frames += [
+            c.frame.select(F.lit(i).alias("i"), "n")
+            for i, c in enumerate(self.checks)
+            if c.frame is not None
+        ]
+        return functools.reduce(DataFrame.unionByName, frames) if frames else None
+
     def collect_failures(self) -> dict[str, int]:
-        failures: dict[str, int] = {}
-        agg_checks = [c for c in self.checks if c.agg is not None]
-        if agg_checks:
-            row = self.df.agg(
-                *[c.agg.alias(f"c{i}") for i, c in enumerate(agg_checks)]
-            ).first()
-            for i, c in enumerate(agg_checks):
-                n = row[f"c{i}"]
-                if n:
-                    failures[c.name] = n
-        for c in self.checks:
-            if c.thunk is not None:
-                n = c.thunk()
-                if n:
-                    failures[c.name] = n
-        return failures
+        counts = self._counts()
+        rows = sorted(counts.collect()) if counts is not None else []
+        return {self.checks[i].name: n for i, n in rows if n}
 
     def run(self) -> None:
         failures = self.collect_failures()
@@ -145,51 +128,20 @@ class Expectation:
 
     def report(self, table: str) -> DataFrame:
         """The dbt-`test`-run artifact as ONE lazy DataFrame: (table,
-        test, n_violations, passed) with a row per registered check.
-        All expression checks fold into a single aggregate pass over the
-        base frame (then melt via stack); unique/fk contribute their own
-        1-row count plans — so N checks still cost one job per
-        underlying plan when the union executes, the same batching
-        contract as run()."""
-        frames: list[DataFrame] = []
-        agg_checks = [c for c in self.checks if c.agg is not None]
-        if agg_checks:
-            one = self.df.agg(
-                *[c.agg.cast("long").alias(f"c{i}") for i, c in enumerate(agg_checks)]
-            )
-            pairs = ", ".join(
-                "'" + c.name.replace("'", "") + f"', c{i}"
-                for i, c in enumerate(agg_checks)
-            )
-            frames.append(
-                one.select(
-                    F.expr(
-                        f"stack({len(agg_checks)}, {pairs}) AS (test, n_violations)"
-                    )
-                )
-            )
-        for c in self.checks:
-            if c.frame is not None:
-                frames.append(
-                    c.frame().select(
-                        F.lit(c.name).alias("test"),
-                        F.col("n").alias("n_violations"),
-                    )
-                )
-        if not frames:
-            # no registered checks (or none with an agg/frame): an empty
-            # report with the contract schema, not an IndexError
+        test, n_violations, passed) with a row per registered check, read
+        from the same plan as ``collect_failures()``."""
+        counts = self._counts()
+        if counts is None:
+            # no registered checks: an empty report with the contract schema
             return self.df.sparkSession.createDataFrame(
                 [], "table string, test string, n_violations long, passed boolean"
             )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out.select(
+        names = F.array(*[F.lit(c.name) for c in self.checks])
+        return counts.select(
             F.lit(table).alias("table"),
-            "test",
-            "n_violations",
-            (F.col("n_violations") == 0).alias("passed"),
+            F.element_at(names, F.col("i") + 1).alias("test"),
+            F.col("n").alias("n_violations"),
+            (F.col("n") == 0).alias("passed"),
         )
 
 
